@@ -23,6 +23,7 @@ an equi-join (SURVEY §2.4). RID-valued links use target key ``@rid``.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -42,9 +43,10 @@ META_COLS = (RID_COL, CLASS_COL, VERSION_COL)
 # map<string,string> column (ODocument accepts fields outside the declared
 # schema, core:record/impl/ODocument.java:55-57; SURVEY §7 hard-part 1)
 EXTRA_COL = "_extra"
-# hidden stable RID position for classes without a declared key — assigned
-# once per record by DML (persistent counter, like the reference's cluster
-# position allocation) and carried through copy-on-write rewrites
+# hidden RID position — the one record identity every layer reads (@rid,
+# tx rebase, save/open, import). The catalog alone writes it: a class's key
+# rule fills it at registration, Catalog.assign_positions gives new rows
+# theirs, and copy-on-write rewrites carry it, so @rid never moves
 RID_POS_COL = "__rid_pos"
 # collapse DML plan lineage every N copy-on-write swaps: N sequential
 # UPDATEs otherwise build an N-deep withColumn(when…) plan
@@ -82,13 +84,16 @@ class OClass:
     super_class: str | None = None
     # Lazy DataFrame supplier; swapped on DML rewrite (copy-on-write).
     df_supplier: Callable[[], DataFrame] | None = None
-    # Optional expression producing a stable long position for @rid.pos.
+    # Optional key rule: the position of a new record is derived from its
+    # own fields (read by the catalog only — everything else reads
+    # RID_POS_COL).
     rid_pos: Callable[[DataFrame], "F.Column"] | None = None
     # copy-on-write swap count (drives periodic lineage checkpoints)
     rewrites: int = 0
-    # next RID position for DML-allocated records (persistent counter —
-    # @rid stays stable across rewrites, unlike monotonically_increasing_id)
-    next_rid: int = 0
+    # persistent position counter for classes without a key rule, like the
+    # reference's cluster position allocation; None until the first write
+    # starts it above the positions already stored
+    next_rid: int | None = None
 
     def lower_properties(self) -> dict[str, OProperty]:
         return {k.lower(): v for k, v in self.properties.items()}
@@ -135,22 +140,28 @@ class Catalog:
                 existing.properties[col] = p
             if rid_pos is not None:
                 existing.rid_pos = rid_pos
+                if existing.df_supplier is not None:
+                    sup = existing.df_supplier
+                    existing.df_supplier = lambda: _keyed(sup(), rid_pos)
             return existing
         if cluster_id is None:
             cluster_id = self._next_cluster
         self._next_cluster = max(self._next_cluster, cluster_id + 1)
 
+        def shape(d: DataFrame) -> DataFrame:
+            if transform is not None:
+                d = transform(d)
+            return d if rid_pos is None else _keyed(d, rid_pos)
+
         supplier: Callable[[], DataFrame] | None = None
         if path is not None:
             spark = self.spark
-            if transform is not None:
-                supplier = lambda p=path, t=transform: t(spark.read.parquet(p))  # noqa: E731
-            else:
-                supplier = lambda p=path: spark.read.parquet(p)  # noqa: E731
+            # read on first scan, then reuse: the key projection is built
+            # once, and the file listing is pinned as a DML rewrite or a
+            # reopened database already pins it
+            supplier = functools.cache(lambda p=path: shape(spark.read.parquet(p)))
         elif df is not None:
-            if transform is not None:
-                df = transform(df)
-            supplier = lambda d=df: d  # noqa: E731
+            supplier = lambda d=shape(df): d  # noqa: E731
 
         cls = OClass(
             name=name,
@@ -178,6 +189,74 @@ class Catalog:
         if cls.rewrites % DML_CHECKPOINT_EVERY == 0:
             df = df.localCheckpoint(eager=True)
         cls.df_supplier = lambda: df
+
+    def assign_positions(
+        self,
+        cls: OClass | None,
+        existing: DataFrame | None,
+        rows: DataFrame,
+        one_row: bool = False,
+    ) -> tuple[DataFrame | None, DataFrame, int, int | None]:
+        """Give ``rows`` — new records of ``cls``, or of a class the write
+        is about to register when ``cls`` is None — their RID_POS_COL: the
+        class's key rule when it has one, otherwise the next positions of
+        the persistent counter. ``existing`` rows that carry no positions
+        yet (a class registered without a key rule, never written) are
+        frozen once first, so their @rid stops moving.
+
+        ``one_row`` (a per-row INSERT) takes the position as a literal; any
+        other batch is numbered by a distributed prefix sum —
+        per-partition counts (a counters-only collect, one row per
+        partition) become offsets and a partition-local window supplies
+        the local index, so there is no global window and no per-row
+        Python loop.
+
+        Returns ``(existing, rows, row_count, next_rid)``. Nothing is
+        installed here: the caller sets ``cls.next_rid = next_rid`` when
+        the write commits, so a rejected write burns no positions."""
+        from pyspark.sql import Window
+
+        rule, counter = (cls.rid_pos, cls.next_rid) if cls is not None else (None, None)
+        if rule is not None:
+            if existing is not None:
+                # columns the rule reads may be absent from the new rows
+                missing = [f for f in existing.schema.fields if f.name not in rows.columns]
+                if missing:
+                    rows = rows.select(
+                        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
+                    )
+            rows = _keyed(rows, rule)
+            return existing, rows, 1 if one_row else rows.count(), counter
+        start = counter
+        if existing is not None and RID_POS_COL not in existing.columns:
+            existing = existing.withColumn(
+                RID_POS_COL, F.monotonically_increasing_id()
+            ).localCheckpoint(eager=True)
+            start = None  # count on from the positions just frozen
+        if start is None:
+            top = existing.agg(F.max(RID_POS_COL)).first()[0] if existing is not None else None
+            start = max(counter or 0, 0 if top is None else top + 1)
+        if one_row:
+            return existing, rows.withColumn(RID_POS_COL, F.lit(start).cast("long")), 1, start + 1
+        # freeze partition assignment so the counts pass and the window
+        # pass see the same pids
+        rows = rows.withColumn("__pid", F.spark_partition_id()).localCheckpoint(eager=True)
+        counts = rows.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c")).collect()
+        offsets: dict[int, int] = {}
+        acc = start
+        for r in sorted(counts, key=lambda row: row["__pid"]):
+            offsets[r["__pid"]] = acc
+            acc += r["__c"]
+        off = (
+            F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])
+            if offsets
+            else F.create_map()
+        )
+        local = Window.partitionBy("__pid").orderBy(F.monotonically_increasing_id())
+        rows = rows.withColumn(
+            RID_POS_COL, off[F.col("__pid")] + F.row_number().over(local) - 1
+        ).drop("__pid")
+        return existing, rows, acc - start, acc
 
     def drop_class(self, name: str) -> None:
         self._classes.pop(name.lower(), None)
@@ -239,8 +318,9 @@ class Catalog:
         """Class scan. ``polymorphic=True`` unions subclass tables — the
         ORecordIteratorClass behavior (core:iterator/ORecordIteratorClass.java:36-51).
         ``with_meta`` materializes @rid/@class/@version as real columns;
-        ``internal`` keeps the hidden version backing column (DML rewrites
-        need it to preserve versions across copy-on-write)."""
+        ``internal`` keeps the hidden version and position columns (DML
+        rewrites need them to preserve versions and @rid across
+        copy-on-write)."""
         classes = self.subclasses(name) if polymorphic else [self.get(name)]
         parts: list[DataFrame] = []
         for cls in classes:
@@ -264,13 +344,13 @@ class Catalog:
     def _with_meta(self, df: DataFrame, cls: OClass, keep_backing: bool = False) -> DataFrame:
         if RID_COL in df.columns:
             return df
-        if cls.rid_pos is not None:
-            pos = cls.rid_pos(df)
-        elif RID_POS_COL in df.columns:
-            # DML-allocated stable positions (persistent counter)
-            pos = F.col(RID_POS_COL)
-        else:
-            pos = F.monotonically_increasing_id()
+        # a class without a key rule that nothing has written yet has no
+        # stored positions; they are frozen on its first write
+        pos = (
+            F.col(RID_POS_COL)
+            if RID_POS_COL in df.columns
+            else F.monotonically_increasing_id()
+        )
         # per-record version for optimistic MVCC: DML bumps the hidden
         # backing column on matched rows (core:tx/OTransactionOptimistic
         # re-checks it at commit; SURVEY §4 MVCC row)
@@ -301,3 +381,8 @@ class Catalog:
         semantics (core:sql/OCommandExecutorSQLSelect.java:179-194). Here a
         class's own (non-polymorphic) table."""
         return self.dataframe(cluster, polymorphic=False, with_meta=with_meta)
+
+
+def _keyed(df: DataFrame, rid_pos: Callable[[DataFrame], "F.Column"]) -> DataFrame:
+    """Apply a key rule: a lazy projection, no Spark job."""
+    return df.withColumn(RID_POS_COL, rid_pos(df).cast("long"))

@@ -5,9 +5,10 @@ reference's UPDATE/DELETE rewrite themselves into an internal SELECT and
 mutate each matching record (core:sql/OCommandExecutorSQLUpdate.java:116-131,
 OCommandExecutorSQLDelete.java:49-77); we reuse the same WHERE compiler and
 rewrite the class table as a whole — the Spark-native equivalent (SURVEY
-§3.3). Versioning parity: matched rows get @version+1 semantics via the
-rewrite itself (optimistic-MVCC conflict checking is single-writer v1,
-core:tx/OTransactionOptimistic.java noted in SURVEY §7 hard-part 4).
+§3.3). Versioning parity: matched rows get @version+1 via the rewrite
+itself, and the rewrite carries every record's ``__rid_pos`` along, so
+optimistic transactions (orientdb_spark.tx) re-check each written record's
+version at commit (core:tx/OTransactionOptimistic.java).
 
 Scale note: each statement is one declarative transformation over the
 table — filters push down, no driver-side row loops; a real deployment
@@ -242,18 +243,30 @@ def _literal_value(engine, e: A.Expr):
     raise OCommandExecutionException("INSERT values must be literals")
 
 
+def _overflow_fields(cls, fields, existing: DataFrame | None) -> list[str]:
+    """Schema-mixed overflow rule (ODocument.java:55-57: a record may carry
+    fields outside the declared schema): in a class WITH declared
+    properties, a field that is neither declared nor already a real column
+    of the table (a schema-less-era column stays a real column) lands in
+    the ``_extra`` map<string,string> column. A class with no declared
+    properties stays fully schema-less: unknown fields widen the table."""
+    from orientdb_spark.catalog import EXTRA_COL
+
+    if cls is None or not cls.properties:
+        return []
+    declared = {p.lower() for p in cls.properties}
+    known = set(existing.columns) if existing is not None else set()
+    return [f for f in fields if f not in known and f.lower() not in declared and f != EXTRA_COL]
+
+
 def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
     """INSERT INTO cls(f,...) VALUES(...) — typed literal parsing per
     core:sql/OCommandExecutorSQLInsert.java:46-146 / OSQLHelper:112-164.
 
-    Schema-mixed semantics (ODocument.java:55-57: a record may carry
-    fields outside the declared schema): inserting an undeclared field
-    into a class WITH declared properties routes the value into the
-    ``_extra`` map<string,string> overflow column — existing rows are
-    untouched (null overflow), and reads resolve overflow fields through
-    string values (the reference's stringly per-record fields). A class
-    with no declared properties stays fully schema-less: unknown columns
-    widen the table (every record shares the inferred schema)."""
+    Undeclared fields of a declared class overflow into ``_extra``
+    (``_overflow_fields``) — existing rows are untouched (null overflow),
+    and reads resolve overflow fields through string values (the
+    reference's stringly per-record fields)."""
     from orientdb_spark.catalog import EXTRA_COL
 
     catalog = engine.catalog
@@ -261,75 +274,26 @@ def _insert(engine, cmd: A.InsertCmd) -> DataFrame:
     cls = catalog.get(cmd.class_name) if catalog.has(cmd.class_name) else None
     if cls is None:
         cls = catalog.register_class(cmd.class_name)
-    if cls.df_supplier is not None:
-        existing = cls.df_supplier()
-        # stable RID allocation (persistent counter): classes without a
-        # declared key get a hidden __rid_pos column so @rid survives
-        # copy-on-write rewrites (monotonically_increasing_id would not)
-        from orientdb_spark.catalog import RID_POS_COL
-
-        if cls.rid_pos is None:
-            if RID_POS_COL not in existing.columns:
-                # freeze positions for pre-existing rows once
-                existing = existing.withColumn(
-                    RID_POS_COL, F.monotonically_increasing_id()
-                ).localCheckpoint(eager=True)
-                cls.next_rid = (
-                    existing.agg(F.max(RID_POS_COL)).first()[0] or 0
-                ) + 1
-            elif cls.next_rid == 0:
-                cls.next_rid = (
-                    existing.agg(F.max(RID_POS_COL)).first()[0] or 0
-                ) + 1
-            values[RID_POS_COL] = cls.next_rid
-            cls.next_rid += 1
-        known = {f.name: f.dataType for f in existing.schema.fields}
-        declared = {p.lower() for p in cls.properties}
-        if cls.properties:
-            # schema-mixed: undeclared, non-existing fields overflow
-            overflow = {
-                k: v
-                for k, v in values.items()
-                if k not in known and k.lower() not in declared and k != EXTRA_COL
-            }
-            if overflow:
-                values = {k: v for k, v in values.items() if k not in overflow}
-                values[EXTRA_COL] = {
-                    k: (None if v is None else str(v)) for k, v in overflow.items()
-                }
-                known.setdefault(
-                    EXTRA_COL, T.MapType(T.StringType(), T.StringType(), True)
-                )
-        # build the row with an explicit schema: known columns take the
-        # existing type (NULL literals stay typed — schema-less nulls can't
-        # be inferred), unknown columns infer from the python value
-        schema = T.StructType(
-            [T.StructField(k, known.get(k, _infer_type(v)), True) for k, v in values.items()]
-        )
-        row_df = engine.spark.createDataFrame([tuple(values.values())], schema)
-        _validate(engine, cmd.class_name, row_df)
-        new = existing.unionByName(row_df, allowMissingColumns=True)
-        _check_unique(engine, cmd.class_name, new, touched=set(values))
-    else:
-        from orientdb_spark.catalog import RID_POS_COL
-
-        if cls.properties:
-            declared = {p.lower() for p in cls.properties}
-            overflow = {
-                k: v
-                for k, v in values.items()
-                if k.lower() not in declared and k != EXTRA_COL
-            }
-            if overflow:
-                values = {k: v for k, v in values.items() if k not in overflow}
-                values[EXTRA_COL] = {
-                    k: (None if v is None else str(v)) for k, v in overflow.items()
-                }
-        if cls.rid_pos is None:
-            values[RID_POS_COL] = cls.next_rid
-            cls.next_rid += 1
-        new = engine.spark.createDataFrame([values])
-        _validate(engine, cmd.class_name, new)
+    existing = cls.df_supplier() if cls.df_supplier is not None else None
+    overflow = _overflow_fields(cls, values, existing)
+    if overflow:
+        extra = {k: (None if values[k] is None else str(values[k])) for k in overflow}
+        values = {k: v for k, v in values.items() if k not in overflow}
+        values[EXTRA_COL] = extra
+    # build the row with an explicit schema: known columns take the
+    # existing type (NULL literals stay typed — schema-less nulls can't be
+    # inferred), unknown columns infer from the python value
+    known = {f.name: f.dataType for f in existing.schema.fields} if existing is not None else {}
+    known.setdefault(EXTRA_COL, T.MapType(T.StringType(), T.StringType(), True))
+    schema = T.StructType(
+        [T.StructField(k, known.get(k, _infer_type(v)), True) for k, v in values.items()]
+    )
+    row = engine.spark.createDataFrame([tuple(values.values())], schema)
+    _validate(engine, cmd.class_name, row)
+    existing, row, _, next_rid = catalog.assign_positions(cls, existing, row, one_row=True)
+    new = existing.unionByName(row, allowMissingColumns=True) if existing is not None else row
+    _check_unique(engine, cmd.class_name, new, touched=set(values))
+    cls.next_rid = next_rid
     catalog.set_dataframe(cmd.class_name, new)
     return _result(engine, inserted=1)
 
@@ -349,16 +313,10 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
     UNIQUE-index probes as distributed scans (both skipped under the
     'massiveinsert' intent, OIntentMassiveInsert.java:10-44), before/
     after-create hooks fired once per statement, appended rows start at
-    @version 0.
-
-    Scale shape: RID allocation is the pack_sequences distributed prefix
-    sum — per-partition counts (a counters-only collect, n_partitions
-    rows) become broadcast offsets and a partition-local window supplies
-    the local index — so new rows get contiguous ``__rid_pos`` after the
-    existing max with NO global window and no per-row driver work."""
-    from pyspark.sql import Window
-
-    from orientdb_spark.catalog import EXTRA_COL, RID_POS_COL
+    @version 0. New rows get contiguous positions after the existing ones
+    (``Catalog.assign_positions``: a distributed prefix sum, no global
+    window and no per-row Python loop)."""
+    from orientdb_spark.catalog import EXTRA_COL
 
     def run() -> DataFrame:
         # all catalog state (class registration, next_rid advance, the
@@ -374,78 +332,28 @@ def bulk_append(engine, class_name: str, df: DataFrame) -> DataFrame:
             else None
         )
         new_rows = df
-        if cls is not None and cls.properties:
-            # same overflow rule as per-row _insert: undeclared AND not
-            # already a real column of the table (a schema-less-era
-            # column stays a real column)
-            declared = {p.lower() for p in cls.properties}
-            known = set(existing.columns) if existing is not None else set()
-            overflow = [
-                c
-                for c in new_rows.columns
-                if c not in known and c.lower() not in declared and c != EXTRA_COL
-            ]
-            if overflow:
-                new_rows = new_rows.withColumn(
-                    EXTRA_COL,
-                    F.map_from_arrays(
-                        F.array(*[F.lit(c) for c in overflow]),
-                        F.array(*[F.col(c).cast("string") for c in overflow]),
-                    ),
-                ).drop(*overflow)
-        rid_managed = cls is None or cls.rid_pos is None
-        if rid_managed:
-            if existing is not None and RID_POS_COL not in existing.columns:
-                # freeze positions for pre-existing rows (local frame
-                # only — published with the union at commit)
-                existing = existing.withColumn(
-                    RID_POS_COL, F.monotonically_increasing_id()
-                ).localCheckpoint(eager=True)
-                start = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
-            elif existing is not None and cls.next_rid == 0:
-                start = (existing.agg(F.max(RID_POS_COL)).first()[0] or 0) + 1
-            else:
-                start = cls.next_rid if cls is not None else 0
-            # freeze partition assignment so the counts pass and the
-            # window pass see the same pids
+        overflow = _overflow_fields(cls, new_rows.columns, existing)
+        if overflow:
             new_rows = new_rows.withColumn(
-                "__pid", F.spark_partition_id()
-            ).localCheckpoint(eager=True)
-            counts = new_rows.groupBy("__pid").agg(
-                F.count(F.lit(1)).alias("__c")
-            ).collect()  # bounded: one row per partition
-            offsets: dict[int, int] = {}
-            acc = start
-            for r in sorted(counts, key=lambda row: row["__pid"]):
-                offsets[r["__pid"]] = acc
-                acc += r["__c"]
-            n = acc - start
-            off = (
-                F.create_map(*[F.lit(v) for kv in offsets.items() for v in kv])
-                if offsets
-                else F.create_map()
-            )
-            local = Window.partitionBy("__pid").orderBy(
-                F.monotonically_increasing_id()
-            )
-            new_rows = new_rows.withColumn(
-                RID_POS_COL,
-                off[F.col("__pid")] + F.row_number().over(local) - 1,
-            ).drop("__pid")
-        else:
-            n = new_rows.count()
+                EXTRA_COL,
+                F.map_from_arrays(
+                    F.array(*[F.lit(c) for c in overflow]),
+                    F.array(*[F.col(c).cast("string") for c in overflow]),
+                ),
+            ).drop(*overflow)
         _validate(engine, class_name, new_rows)
+        touched = set(new_rows.columns)
+        existing, new_rows, n, next_rid = catalog.assign_positions(cls, existing, new_rows)
         union = (
             existing.unionByName(new_rows, allowMissingColumns=True)
             if existing is not None
             else new_rows
         )
-        _check_unique(engine, class_name, union, touched=set(new_rows.columns))
+        _check_unique(engine, class_name, union, touched=touched)
         # checks passed — commit
         if cls is None:
             cls = catalog.register_class(class_name)
-        if rid_managed:
-            cls.next_rid = acc
+        cls.next_rid = next_rid
         catalog.set_dataframe(class_name, union)
         return _result(engine, inserted=n)
 
@@ -622,8 +530,9 @@ def _create_link(engine, cmd: A.CreateLinkCmd) -> DataFrame:
     :193-195, inverse :202-230). One distributed join + dup-check — the
     reference's per-row nested-loop becomes a single shuffle."""
     catalog = engine.catalog
-    a = catalog.dataframe(cmd.from_class, polymorphic=False, with_meta=True)
-    b = catalog.dataframe(cmd.to_class, polymorphic=False, with_meta=True)
+    # internal: the rewritten side keeps its hidden positions and versions
+    a = catalog.dataframe(cmd.from_class, polymorphic=False, with_meta=True, internal=True)
+    b = catalog.dataframe(cmd.to_class, polymorphic=False, with_meta=True, internal=True)
 
     dup = (
         b.groupBy(F.col(cmd.to_field).alias("__k"))

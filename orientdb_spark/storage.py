@@ -57,8 +57,8 @@ def _prop_from_dict(d: dict) -> OProperty:
 
 def save_database(engine, db_dir: str) -> None:
     """Write every class's rows to ``db_dir/<class>/`` parquet and the
-    schema to ``db_dir/catalog.json``. RID positions are materialized to a
-    hidden column so identities survive the roundtrip."""
+    schema to ``db_dir/catalog.json``. The hidden ``__rid_pos`` column is
+    written with the rows, so identities survive the roundtrip."""
     os.makedirs(db_dir, exist_ok=True)
     manifest: dict[str, dict] = {}
     for name in engine.catalog.class_names():
@@ -71,8 +71,6 @@ def save_database(engine, db_dir: str) -> None:
         }
         if cls.df_supplier is not None:
             df = engine.catalog.dataframe(name, polymorphic=False, internal=True)
-            if cls.rid_pos is not None and "__rid_pos" not in df.columns:
-                df = df.withColumn("__rid_pos", cls.rid_pos(df).cast("long"))
             df.write.mode("overwrite").parquet(os.path.join(db_dir, name))
         manifest[name] = entry
     with open(os.path.join(db_dir, _CATALOG_FILE), "w") as fh:
@@ -82,7 +80,10 @@ def save_database(engine, db_dir: str) -> None:
 def open_database(engine, db_dir: str) -> None:
     """Register every saved class into ``engine`` from ``db_dir``:
     schema, inheritance, links, constraints; FULLTEXT indexes rebuild
-    from the reloaded rows (the reference bulk-builds on import too)."""
+    from the reloaded rows (the reference bulk-builds on import too).
+    Saved positions come back in ``__rid_pos``; a key rule does not
+    survive the roundtrip, so new records of a reopened class take
+    positions from the counter, above the saved maximum."""
     with open(os.path.join(db_dir, _CATALOG_FILE)) as fh:
         manifest = json.load(fh)
     fulltext: list[tuple[str, str]] = []
@@ -95,8 +96,6 @@ def open_database(engine, db_dir: str) -> None:
         )
         if entry.get("has_data"):
             df = engine.spark.read.parquet(os.path.join(db_dir, name))
-            if "__rid_pos" in df.columns:
-                kw["rid_pos"] = lambda d: F.col("__rid_pos")
             engine.catalog.register_class(name, df=df, **kw)
         else:
             engine.catalog.register_class(name, **kw)

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from orientdb_spark.catalog import CLASS_COL, RID_COL, VERSION_COL
+from orientdb_spark.catalog import CLASS_COL, RID_COL, RID_POS_COL, VERSION_COL
 
 
 def export_class(engine, class_name: str, path: str) -> None:
@@ -60,17 +60,13 @@ def export_database(engine, out_dir: str) -> dict[str, str]:
 
 def import_class(engine, class_name: str, path: str, **register_kw) -> None:
     """Reload a class from its JSON dump; metadata keys become engine
-    metadata again (rid position parsed back from '#cluster:pos' and kept
-    as a hidden column so re-exported RIDs are stable)."""
+    metadata again (rid position parsed back from '#cluster:pos' into the
+    hidden ``__rid_pos`` column so re-exported RIDs are stable)."""
     df = engine.spark.read.json(path)
     meta = [c for c in (RID_COL, CLASS_COL, VERSION_COL) if c in df.columns]
     if RID_COL in df.columns:
         pos_col = F.split(F.regexp_replace(F.col(f"`{RID_COL}`"), "#", ""), ":").getItem(1)
-        data = df.withColumn("__import_pos", pos_col.cast("long")).drop(*meta)
-        engine.register_dataframe(
-            class_name, data, rid_pos=lambda d: F.col("__import_pos"), **register_kw
-        )
-        return
+        df = df.withColumn(RID_POS_COL, pos_col.cast("long"))
     engine.register_dataframe(class_name, df.drop(*meta), **register_kw)
 
 

@@ -8,17 +8,18 @@ tests:database/auto/TransactionOptimisticTest.java:40-90).
 Spark adaptation: DML is class-granular copy-on-write (SURVEY §3.3), so
 the transaction snapshots each class's table identity at begin and
 buffers its own rewrites in an isolated overlay catalog. Commit checks
-conflicts at RECORD granularity when the class has a stable record
-identity (``rid_pos`` or the DML-allocated ``__rid_pos`` column): the
-tx's write-set is diffed out of (snapshot vs overlay), every written
-record must be unchanged in the live table relative to the snapshot
-(same presence + same @version — the reference's per-record version
-re-check), and a clean check REBASES the write-set onto the live table,
-so concurrent commits touching disjoint records of the same class both
-land. Overlaps raise OConcurrentModificationException; classes without
-stable identity keep the class-granular first-committer-wins. Atomic
-either way: all classes install or none, and the engine state is
-untouched on failure.
+conflicts at RECORD granularity, keyed by the hidden ``__rid_pos`` column
+the catalog keeps for every record: the tx's write-set is diffed out of
+(snapshot vs overlay), every written record must be unchanged in the live
+table relative to the snapshot (same presence + same @version — the
+reference's per-record version re-check), and a clean check REBASES the
+write-set onto the live table, so concurrent commits touching disjoint
+records of the same class both land. Overlaps raise
+OConcurrentModificationException. One case stays class-granular
+(first-committer-wins): a class registered without a key rule that no
+INSERT or append had written when the tx began, whose rows carry no
+positions yet. Atomic either way: all classes install or none, and the
+engine state is untouched on failure.
 """
 
 from __future__ import annotations
@@ -89,11 +90,12 @@ class Transaction:
     # -- lifecycle ---------------------------------------------------------------
 
     def commit(self) -> None:
-        """Commit-time conflict check at per-record granularity where a
-        stable rid exists (the reference's version re-check,
-        OTransactionOptimistic.java:22-45), class-granular
-        first-committer-wins otherwise. All validation runs before any
-        class installs — atomicity across classes is preserved."""
+        """Commit-time conflict check per record, keyed by ``__rid_pos``
+        (the reference's version re-check, OTransactionOptimistic.java:
+        22-45); class-granular first-committer-wins only for rows that
+        carry no positions yet (see the module docstring). All validation
+        runs before any class installs — atomicity across classes is
+        preserved."""
         self._check_active()
         cat = self.engine.catalog
         installs: dict[str, object] = {}
@@ -114,7 +116,7 @@ class Transaction:
                     raise OConcurrentModificationException(
                         f"Class '{name}' was created after the transaction began"
                     )
-                merged = self._rebase(cls, name, snap_sup(), cur_sup(), ovl_sup())
+                merged = self._rebase(name, snap_sup(), cur_sup(), ovl_sup())
                 installs[name] = lambda _df=merged: _df
         except BaseException:
             # any validation failure (conflict OR an unexpected analysis/
@@ -127,12 +129,12 @@ class Transaction:
         self.engine._plan_cache.clear()
         self._active = False
 
-    def _rebase(self, cls, name: str, snap, cur, ovl):
+    def _rebase(self, name: str, snap, cur, ovl):
         """Per-record validation + rebase of this tx's write-set onto the
         live table. The write-set is the (snapshot vs overlay) diff keyed
-        by rid; a record conflicts when the live table disagrees with the
-        snapshot about it (presence or @version). Returns the merged
-        DataFrame, or raises OConcurrentModificationException.
+        by ``__rid_pos``; a record conflicts when the live table disagrees
+        with the snapshot about it (presence or @version). Returns the
+        merged DataFrame, or raises OConcurrentModificationException.
 
         Schema changes ride along even when the write-set is empty (e.g.
         an UPDATE that matched zero rows but introduced a new all-null
@@ -143,13 +145,8 @@ class Transaction:
 
         from orientdb_spark.catalog import BACKING_VERSION_COL, RID_POS_COL
 
-        if cls.rid_pos is not None:
-            key = cls.rid_pos
-        elif all(RID_POS_COL in d.columns for d in (snap, cur, ovl)):
-            def key(df):
-                return F.col(RID_POS_COL)
-        else:
-            # no stable record identity: class-granular first-committer-wins
+        if not all(RID_POS_COL in d.columns for d in (snap, cur, ovl)):
+            # rows without positions yet: class-granular first-committer-wins
             raise OConcurrentModificationException(
                 f"Class '{name}' was modified since the transaction began"
             )
@@ -161,7 +158,7 @@ class Transaction:
                 else F.lit(0)
             )
             return df.select(
-                key(df).cast("string").alias("__rid"),
+                RID_POS_COL,
                 ver.cast("int").alias(ver_name),
                 F.lit(1).alias(present_name),
             )
@@ -169,12 +166,12 @@ class Transaction:
         s = keyed(snap, "sv", "sp")
         o = keyed(ovl, "ov", "op")
         c = keyed(cur, "cv", "cp")
-        write_set = s.join(o, "__rid", "full_outer").filter(
+        write_set = s.join(o, RID_POS_COL, "full_outer").filter(
             (F.coalesce("sp", F.lit(0)) != F.coalesce("op", F.lit(0)))
             | (F.coalesce("sv", F.lit(-1)) != F.coalesce("ov", F.lit(-1)))
         )
         conflict = (
-            write_set.join(c, "__rid", "left")
+            write_set.join(c, RID_POS_COL, "left")
             .filter(
                 # tx-inserted rid: must still be free in the live table;
                 # tx-updated/deleted rid: must exist there with the
@@ -190,16 +187,10 @@ class Transaction:
                 f"{conflict} record(s) of class '{name}' were modified since "
                 "the transaction began"
             )
-        ws_ids = write_set.select("__rid")
-        keep = (
-            cur.withColumn("__rid", key(cur).cast("string"))
-            .join(ws_ids, "__rid", "left_anti")
-        )
-        mine = (
-            ovl.withColumn("__rid", key(ovl).cast("string"))
-            .join(ws_ids, "__rid", "left_semi")
-        )
-        return keep.unionByName(mine, allowMissingColumns=True).drop("__rid")
+        ws_ids = write_set.select(RID_POS_COL)
+        keep = cur.join(ws_ids, RID_POS_COL, "left_anti")
+        mine = ovl.join(ws_ids, RID_POS_COL, "left_semi")
+        return keep.unionByName(mine, allowMissingColumns=True)
 
     def rollback(self) -> None:
         self._check_active()

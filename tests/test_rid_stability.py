@@ -25,6 +25,41 @@ def test_rids_stable_across_updates(spark):
     assert rids["d"] not in before.values()
 
 
+def test_keyed_record_keeps_rid_when_key_changes(spark):
+    """RIDs are physical: a class registered with a key rule derives each
+    record's position once, so an UPDATE of the key column leaves @rid
+    where it was."""
+    from pyspark.sql import functions as F
+
+    eng = Engine(spark)
+    eng.register_dataframe(
+        "keyed",
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string"),
+        rid_pos=lambda d: F.col("id"),
+    )
+    before = {r.name: r.rid for r in eng.sql("select name, @rid as rid from keyed").collect()}
+    eng.command("update keyed set id = 50 where name = 'b'")
+    after = {r.name: r.rid for r in eng.sql("select name, @rid as rid from keyed").collect()}
+    assert after == before
+    assert [r.name for r in eng.sql(f"select name from #{before['b'].cluster}:2").collect()] == ["b"]
+
+
+def test_create_link_keeps_rids_and_versions(spark):
+    """CREATE LINK rewrites the source class; its records keep their @rid
+    and @version through that rewrite."""
+    eng = Engine(spark)
+    eng.command("create class lk_city")
+    eng.command("insert into lk_city (name) values ('Rome')")
+    eng.command("create class lk_person")
+    for name in ("ann", "bob", "cid"):
+        eng.command(f"insert into lk_person (name, city) values ('{name}', 'Rome')")
+    eng.command("update lk_person set city = 'Rome' where name = 'bob'")
+    q = "select name, @rid as rid, @version as v from lk_person"
+    before = {r.name: (r.rid, r.v) for r in eng.sql(q).collect()}
+    eng.command("create link lives from lk_person.city to lk_city.name")
+    assert {r.name: (r.rid, r.v) for r in eng.sql(q).collect()} == before
+
+
 def test_sequential_updates_keep_plan_bounded(spark):
     eng = Engine(spark)
     eng.command("create class seqt")

@@ -70,6 +70,25 @@ def test_save_collapses_dml_lineage(spark):
     assert names == ["N0", "N1", "N2", "N3", "N4"]
 
 
+def test_insert_after_reopen_gets_position_above_saved_max(spark):
+    """A reopened class keeps its saved positions, and a new INSERT takes
+    the next one from the counter — non-null and above the saved maximum."""
+    eng = Engine(spark)
+    eng.command("create class reo")
+    eng.append("reo", spark.createDataFrame([("a",), ("b",), ("c",)], "name string"))
+    db = tempfile.mkdtemp(prefix="ospark_db_")
+    eng.save_database(db)
+    saved = {r["name"]: r["rid"] for r in eng.query("select name, @rid as rid from reo")}
+
+    eng2 = Engine(spark)
+    eng2.open_database(db)
+    eng2.command("insert into reo (name) values ('d')")
+    got = {r["name"]: r["rid"] for r in eng2.query("select name, @rid as rid from reo")}
+    assert {k: got[k] for k in saved} == saved
+    top = max(rid["pos"] for rid in saved.values())
+    assert got["d"]["pos"] is not None and got["d"]["pos"] > top
+
+
 def test_compact_table_merges_small_files(spark, tmp_path):
     """Compaction must cut the file count without changing the rows, and
     leave an already-compact table untouched."""

@@ -71,3 +71,19 @@ def test_rid_stable_across_reimport(spark):
         F.col("n_nationkey"), F.col("@rid.pos").alias("pos")
     )
     assert orig.exceptAll(back).count() == 0
+
+
+def test_insert_after_import_gets_position(spark):
+    """An imported class keeps the exported positions, and a new INSERT
+    gets a non-null one above them."""
+    eng = _eng(spark)
+    tmp = tempfile.mkdtemp(prefix="ospark_tools_")
+    export_class(eng, "region", f"{tmp}/region")
+    import_class(eng, "region_i", f"{tmp}/region")
+    eng.command("insert into region_i (r_regionkey, r_name) values (9, 'NEW')")
+    pos = {
+        r["r_name"]: r["rid"]["pos"]
+        for r in eng.query("select r_name, @rid as rid from region_i")
+    }
+    assert pos["NEW"] is not None
+    assert pos["NEW"] > max(p for name, p in pos.items() if name != "NEW")

@@ -134,6 +134,27 @@ def test_tx_insert_rid_collision_conflicts(spark):
     assert rows == ["N1"]
 
 
+def test_tx_disjoint_updates_commit_on_reopened_class(spark, tmp_path):
+    """After save/open and an INSERT, per-record conflict checking still
+    works: two transactions updating different records both commit."""
+    eng = _eng_rid(spark)
+    eng.save_database(str(tmp_path / "db"))
+    eng2 = Engine(spark)
+    eng2.open_database(str(tmp_path / "db"))
+    eng2.command("insert into acct (r_regionkey, r_name) values (100, 'N1')")
+    tx1 = eng2.begin()
+    tx2 = eng2.begin()
+    tx1.command("update acct set r_name = 'A' where r_regionkey = 1")
+    tx2.command("update acct set r_name = 'B' where r_regionkey = 100")
+    tx1.commit()
+    tx2.commit()
+    rows = {
+        r["r_regionkey"]: r["r_name"]
+        for r in eng2.query("select r_regionkey, r_name from acct")
+    }
+    assert rows[1] == "A" and rows[100] == "B" and len(rows) == 6
+
+
 def test_tx_class_created_after_begin_conflicts(spark):
     """A class created after begin has no snapshot to diff a write-set
     against; touching it through the tx must surface as a clean
